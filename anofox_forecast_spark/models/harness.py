@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from anofox_forecast_spark._worker import release_zip_finders
 from anofox_forecast_spark.core.frequency import parse_frequency
 from anofox_forecast_spark.models.registry import get_model
 
@@ -48,9 +49,13 @@ def _grouped_apply(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
     is exempt from AQE coalescing and hash-partitions by the same keys the
     groupBy needs, so no extra shuffle is introduced.
     """
+    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
+        release_zip_finders()
+        return fn(pdf)
+
     sc = df.sparkSession.sparkContext
     target = max(sc.defaultParallelism * 2, 8)
-    return df.repartition(target, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
+    return df.repartition(target, *keys).groupBy(*keys).applyInPandas(apply, schema=schema)
 
 
 def _last_key_mask(pdf: pd.DataFrame, keys_l: list[str]) -> np.ndarray:
@@ -94,6 +99,7 @@ def batched_series_apply(df: DataFrame, keys, ts_col, per_series, out_schema) ->
         })
 
     def run(batches):
+        release_zip_finders()
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None:
@@ -170,7 +176,6 @@ def forecast(
     keys_l = list(keys)
 
     resolved = [(name, get_model(name), params) for name, params in specs.items()]
-    empty = {f.name: [] for f in out_schema.fields}
 
     def one_series(g: pd.DataFrame, out: dict) -> None:
         if len(g) > max_points_per_series:
@@ -192,41 +197,7 @@ def forecast(
             out["lo"].append(res.lo)
             out["hi"].append(res.hi)
 
-    def run(batches):
-        # mapInPandas over key-partitioned, key+ts-sorted data: MANY series
-        # per Arrow batch (one pandas frame per ~10k rows instead of one per
-        # series) — grouped-map per-series dispatch otherwise dominates for
-        # short post-rollup series. A series split across batch boundaries
-        # is carried into the next batch (partitions are key-contiguous).
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            # hold back the trailing group — it may continue in the next batch
-            if len(pdf) == 0:
-                continue
-            mask = _last_key_mask(pdf, keys_l)
-            carry = pdf.iloc[mask.nonzero()[0]]
-            body = pdf.iloc[(~mask).nonzero()[0]]
-            if len(body):
-                out = {f.name: [] for f in out_schema.fields}
-                for _, g in body.groupby(keys_l, sort=False, dropna=False):
-                    one_series(g, out)
-                if out["model"]:
-                    yield pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
-        if carry is not None and len(carry):
-            out = {f.name: [] for f in out_schema.fields}
-            for _, g in carry.groupby(keys_l, sort=False, dropna=False):
-                one_series(g, out)
-            if out["model"]:
-                yield pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
-        if False:
-            yield pd.DataFrame(empty)
-
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * 2, 8)
-    prepared = df.repartition(target, *keys_l).sortWithinPartitions(*keys_l, ts_col)
-    return prepared.mapInPandas(run, schema=out_schema)
+    return batched_series_apply(df, keys_l, ts_col, one_series, out_schema)
 
 
 def fitted_values(

@@ -25,6 +25,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 _CRLF2 = b"\r\n\r\n"
 
 RECORD_SCHEMA = (
@@ -118,6 +120,7 @@ def parse_warc_records(
     pc, cc = path_col, content_col
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             rows = []
             for path, content in zip(pdf[pc], pdf[cc]):

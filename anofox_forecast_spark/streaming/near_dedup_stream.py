@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from anofox_forecast_spark._worker import release_zip_finders
 from anofox_forecast_spark.webtext.dedup import band_buckets, minhash_signatures
 
 _OUT_SCHEMA = StructType([
@@ -80,6 +81,7 @@ def streaming_minhash_near_dups(
         "id", ts_col, "band", "bucket")
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        release_zip_finders()
         if state.hasTimedOut:
             state.remove()
             return

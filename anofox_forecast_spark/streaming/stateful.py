@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 
 def ses_level_np(y: np.ndarray, alpha: float, init: float | None = None) -> float:
     """Fold the SES recursion over y; ``init`` carries prior state."""
@@ -72,6 +74,7 @@ def streaming_ses_level(
     def update(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
+        release_zip_finders()
         if state.exists:
             level, n = state.get
         else:

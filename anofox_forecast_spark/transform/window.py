@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 _AGGS = {
     "mean": F.avg,
     "sum": F.sum,
@@ -104,6 +106,7 @@ def ewm_mean(
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
 
     def run(batches):
+        release_zip_finders()
         carry = None
         for pdf in batches:
             if carry is not None:

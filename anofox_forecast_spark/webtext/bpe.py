@@ -29,6 +29,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 END = "</w>"  # end-of-word marker (Sennrich 2016 convention)
 
 
@@ -174,6 +176,7 @@ def bpe_tokenize(
 
     @F.pandas_udf("array<string>")
     def encode(words: pd.Series) -> pd.Series:
+        release_zip_finders()
         cache: dict[str, list[str]] = {}
 
         def enc_doc(ws):

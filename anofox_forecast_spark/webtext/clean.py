@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 # Query parameters stripped by the URL canonicalizer: click/campaign
 # trackers that never change page content. Prefix match for utm_*,
 # exact-key match for the rest. Pinned here so the DuckDB oracle can
@@ -150,6 +152,7 @@ def normalize_text(
 
     @F.pandas_udf(StringType())
     def _norm(s: pd.Series) -> pd.Series:
+        release_zip_finders()
         return s.str.normalize(nf)
 
     t = F.col(text_col)

@@ -27,6 +27,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 
 def _words(text_col: str) -> Column:
     return F.split(
@@ -111,6 +113,7 @@ def exact_dedup_incremental(
     n_bytes = bloom_bits // 8
 
     def _partial_blooms(batches):
+        release_zip_finders()
         bitmap = np.zeros(n_bytes, dtype=np.uint8)
         seen = False
         for pdf in batches:
@@ -131,6 +134,7 @@ def exact_dedup_incremental(
 
     @pandas_udf(BooleanType())
     def might_contain(idx_s: pd.Series) -> pd.Series:
+        release_zip_finders()
         if len(idx_s) == 0:
             return pd.Series([], dtype=bool)
         idx = np.stack([np.asarray(a, dtype=np.int64) for a in idx_s])
@@ -241,6 +245,7 @@ def _chunk_key_udf(L: int, seed: int = 23):
 
     @pandas_udf(ArrayType(LongType()))
     def key_udf(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         ndocs = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
         nonempty = lengths > 0
@@ -465,6 +470,7 @@ def minhash_signatures(
 
     @pandas_udf(ArrayType(LongType()))
     def sig_udf(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         ndocs = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
         nonempty = lengths > 0
@@ -706,6 +712,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     @pandas_udf(LongType())
     def bitvote(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         n = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=n)
         out = np.zeros(n, dtype=np.int64)
@@ -1236,6 +1243,7 @@ def semantic_dedup(
 
     @F.pandas_udf("integer")
     def cell_of(embs: pd.Series) -> pd.Series:
+        release_zip_finders()
         m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
         return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
 

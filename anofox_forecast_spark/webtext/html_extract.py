@@ -26,6 +26,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 # subtrees whose text is never content
 _SKIP = {"script", "style", "noscript", "template", "head"}
 # tags that terminate a text block (paragraph break on open AND close)
@@ -97,6 +99,7 @@ def extract_html(df: DataFrame, id_col: str, html_col: str) -> DataFrame:
 
     @F.pandas_udf("struct<title:string, text:string, n_links:int>")
     def ext(pages: pd.Series) -> pd.DataFrame:
+        release_zip_finders()
         rows = []
         for h in pages:
             if h is None:

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", StringType()),
@@ -73,6 +75,7 @@ def extract_media_features(df: DataFrame, batch_size_hint: int = 256) -> DataFra
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             feats, nbytes = [], []
             for payload, kind in zip(pdf["payload"], pdf["kind"]):
@@ -133,6 +136,7 @@ def resize_images(df: DataFrame, width: int = 64, height: int = 64) -> DataFrame
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -173,6 +177,7 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             ids, idxs, tss, frames = [], [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

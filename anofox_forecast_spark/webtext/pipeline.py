@@ -28,6 +28,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, Window
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 from .text_stats import _tokens, quality_scores, repetition_stats
 
 # ---------------------------------------------------------------------------
@@ -76,6 +78,7 @@ def _hashed_shingles(text_col, n: int, seed: int = 11):
 
     @pandas_udf(ArrayType(LongType()))
     def gram_udf(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         ndocs = len(hs)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
         nonempty = lengths > 0
@@ -747,6 +750,7 @@ def pack_greedy(
     )
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        release_zip_finders()
         pdf = pdf.sort_values("id").reset_index(drop=True)
         bin_id, fill = 0, 0
         bins, fills = [], []

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 
 def _norm(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -45,6 +47,7 @@ def _cos_batch():
 
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series, na: pd.Series, nb: pd.Series) -> pd.Series:
+        release_zip_finders()
         ma = np.array(a.tolist(), dtype=np.float64)
         mb = np.array(b.tolist(), dtype=np.float64)
         if ma.ndim != 2 or ma.shape[0] == 0:
@@ -320,6 +323,7 @@ def _broadcast_probe_topk(index_df: DataFrame, qb_pdf, k: int,
         # lookup is one searchsorted over the sorted probed-key array
         # (the string version dictionary-encoded the column and walked a
         # Python dict per distinct string).
+        release_zip_finders()
         import pyarrow as pa
 
         for batch in batches:
@@ -442,6 +446,7 @@ def _inbucket_topk(both: DataFrame, k: int, n_partitions: int) -> DataFrame:
     kk = k
 
     def score(batches):
+        release_zip_finders()
         for g in _iter_bucket_groups(batches):
             qm = g["is_q"].to_numpy()
             if not qm.any() or qm.all():
@@ -528,6 +533,7 @@ def hyperplane_buckets(
 
     @F.pandas_udf("array<long>")
     def buckets_of(embs: pd.Series) -> pd.Series:
+        release_zip_finders()
         m = np.array(embs.tolist(), dtype=np.float64)
         if m.ndim != 2 or m.shape[0] == 0:
             return pd.Series([[] for _ in range(len(embs))])
@@ -609,6 +615,7 @@ def _inbucket_pair_scores(
     thr = threshold
 
     def score(batches):
+        release_zip_finders()
         for g in _iter_bucket_groups(batches):
             n = len(g)
             if n < 2:
@@ -682,6 +689,7 @@ def ivf_build_index(
 
     @F.pandas_udf("integer")
     def cell_of(embs: pd.Series) -> pd.Series:
+        release_zip_finders()
         m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
         return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
 
@@ -776,6 +784,7 @@ def ivf_cosine_topk(
 
     @F.pandas_udf("integer")
     def cell_of(embs: pd.Series) -> pd.Series:
+        release_zip_finders()
         m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
         return pd.Series((m @ cent.T).argmax(axis=1)).astype("int32")
 
@@ -783,6 +792,7 @@ def ivf_cosine_topk(
 
     @F.pandas_udf("array<integer>")
     def probe_cells(embs: pd.Series) -> pd.Series:
+        release_zip_finders()
         m = _normalize_rows(np.array(embs.tolist(), dtype=np.float64))
         top = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe_eff].astype("int32")
         return pd.Series(list(top))

@@ -10,6 +10,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from anofox_forecast_spark._worker import release_zip_finders
+
 # tiny stopword lists per language (n-gram/stopword heuristic language ID)
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "on"],
@@ -134,6 +136,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, window: int = 8) -> D
 
     @pandas_udf(LongType())
     def fp(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         ndocs = len(hs)
         out = np.zeros(ndocs, dtype=np.int64)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)
@@ -288,6 +291,7 @@ def repetition_stats(
 
     @pandas_udf(ArrayType(DoubleType()))
     def rep_udf(hs: pd.Series) -> pd.Series:
+        release_zip_finders()
         ndocs = len(hs)
         out = np.zeros((ndocs, 3), dtype=np.float64)
         lengths = np.fromiter((len(x) for x in hs), dtype=np.int64, count=ndocs)

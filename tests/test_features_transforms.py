@@ -149,6 +149,21 @@ def test_extract_features_spark(spark):
     assert abs(pdf.loc["a", "abs_energy"] - (ya**2).sum()) < 1e-6
 
 
+def test_extract_features_keeps_null_key_series(spark):
+    # a NULL key is a real series (as in forecast / ewm_mean): the trailing
+    # NULL group must be held back and flushed, not dropped by NaN != NaN
+    import datetime as dt
+
+    from anofox_forecast_spark.features.extract import extract_features
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(sid, t0 + dt.timedelta(days=i), y)
+            for sid, y in (("a", 3.0), (None, 7.0)) for i in range(30)]
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, y double")
+    out = extract_features(df, ["sid"], "ts", "y", features=["mean"]).collect()
+    assert sorted((r["sid"] or "", r["mean"]) for r in out) == [("", 7.0), ("a", 3.0)]
+
+
 def test_rolling_expanding_ewm_spark(spark):
     import datetime as dt
 
